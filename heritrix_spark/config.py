@@ -174,19 +174,9 @@ class CrawlConfig:
     # <= partition_salt * burst_max survivors per queue.  A Zipf-head
     # queue therefore never produces an unbounded single-task sort, and
     # its frontier rows are spread over partition_salt shuffle partitions.
-    # 1 disables phase 1 (exact output is identical either way).
+    # 1 disables phase 1 (exact output is identical either way), and the
+    # engine skips it below the CrawlJob._SALT_AUTO_ROWS crossover.
     partition_salt: int = 16
-    # Adaptive salting crossover.  Spark's InferWindowGroupLimit already
-    # inserts a MAP-SIDE partial top-k below the window's Exchange, so
-    # even unsalted, a hot queue's final window group is bounded by
-    # (#map partitions × burst_max) rows — when that bound is small the
-    # phase-1 salt pass is pure overhead (an extra full-frontier shuffle
-    # + sort per superstep).  The engine therefore runs single-phase
-    # whenever #shuffle_partitions × burst_max <= salt_auto_rows, and
-    # two-phase salted above it (the 10^5-partition cluster regime,
-    # where the unsalted bound would be 10^8 rows in one task).  Set
-    # salt_auto_rows=0 to force the salted path unconditionally.
-    salt_auto_rows: int = 262_144
     # Broadcast bloom URL-seen prefilter (BloomUriUniqFilter analog —
     # north_star).  Once the seen set exceeds bloom_min_seen rows, the
     # engine builds a bloom_bits-bit bitmap executor-side, broadcasts it,
@@ -263,50 +253,6 @@ class CrawlConfig:
     # boxes, so 25k promotes within one step of it either way.
     # Re-measure with bench_queue_state.py when hardware changes.
     queue_state_auto_threshold: int = 25_000
-    # Frontier storage tiers (the N→4N scaling shape).
-    #   True  — two-tier frontier: a compacted BASE cached columnar,
-    #           hash-partitioned by (class_key, salt) and sorted by the
-    #           priority key, so the per-step burst top-k runs with NO
-    #           Exchange and NO Sort over it (window + WindowGroupLimit
-    #           directly on the InMemoryRelation); processed rows leave
-    #           via broadcast anti-joins; new/retry rows accumulate in a
-    #           small DELTA (its own bounded window) and fold into the
-    #           base when removed+delta outgrow frontier_compact_frac of
-    #           it.  Per-step shuffle volume is bounded by the burst +
-    #           discoveries, independent of frontier size — the 10^10
-    #           contract.
-    #   False — single merged hot frame, full-frontier window shuffle and
-    #           rewrite every step (the pre-round-3 shape; kept as the
-    #           equivalence fallback).
-    frontier_tiers: bool = True
-    # Compact when (since-compaction removed + delta) exceeds this
-    # fraction of the base — bounds both the broadcast anti-join size and
-    # the delta window's exchange, and amortizes the one full-frontier
-    # exchange+sort to once per ~1/frac of the frontier turning over.
-    frontier_compact_frac: float = 0.25
-    # MINOR compaction: fold just the removal chain into the base with a
-    # narrow, shuffle-free, sort-free rewrite (broadcast anti-join +
-    # localCheckpoint — partitioning and ordering survive) whenever the
-    # accumulated removed fps exceed this fraction of the base.  Bounds
-    # the removal broadcast (which every per-step job rebuilds) without
-    # paying the major compaction's full exchange+sort.
-    frontier_minor_frac: float = 0.08
-    # Image-existence probe placement (the FetchHTTP hit/404 source).
-    #   auto      — broadcast join below ~200k images, sorted-id Arrow
-    #               array above (default);
-    #   broadcast — force the broadcast join;
-    #   array     — force the once-built sorted numpy id array + Arrow
-    #               searchsorted UDF (executor-resident for the crawl);
-    #   bucketed  — storage-partitioned probe: the id projection is
-    #               written ONCE as a bucketed+sorted table (executor-side
-    #               write, ids never pass through the driver) and each
-    #               step's burst sort-merge-joins it bucket-aligned — the
-    #               plan has NO Exchange on the images side (only the
-    #               work-proportional burst shuffles).  The 10^10-image
-    #               path: driver memory O(1), per-step images-side read is
-    #               bucket-pruned parquet from page cache.
-    image_probe: str = "auto"
-    image_probe_buckets: int = 32
     honor_crawl_delay: bool = False  # engine superset mode (SURVEY §2.H R3)
     # Scope (DecideRule fold)
     max_link_hops: int = 20
@@ -343,13 +289,6 @@ class CrawlConfig:
     extract_rules: dict | None = None
     write_rules: dict | None = None
     max_steps: int = 10_000
-
-    def politeness_ms(self, fetch_ms: int, crawl_delay_ms: int = 0) -> int:
-        d = min(max(self.delay_factor * fetch_ms, self.min_delay_ms),
-                self.max_delay_ms)
-        if self.honor_crawl_delay:
-            d = max(d, crawl_delay_ms)
-        return int(d)
 
 
 # The per-host-overridable knob set (O5).  Everything else is crawl-global
@@ -411,8 +350,8 @@ def settings_group_expr(cfg: "CrawlConfig", host_col):
 def politeness_ms_of(delay_factor: float, min_delay_ms: int,
                      max_delay_ms: int, honor_crawl_delay: bool,
                      fetch_ms: int, crawl_delay_ms: int = 0) -> int:
-    """AbstractFrontier politeness with explicit knobs (the per-host
-    override path; CrawlConfig.politeness_ms is the global-sheet case)."""
+    """AbstractFrontier politeness delay for one fetch, from the effective
+    knobs of the queue's settings sheet (:func:`effective_settings`)."""
     d = min(max(delay_factor * fetch_ms, min_delay_ms), max_delay_ms)
     if honor_crawl_delay:
         d = max(d, crawl_delay_ms)

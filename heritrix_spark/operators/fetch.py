@@ -7,7 +7,8 @@ seam:
 1. **Status verdict** on the bounded burst (hit / 404 / transient-retry).
    The sandbox-normative implementation is the image-corpus existence
    probe (``CrawlJob.__init__``: broadcast join / sorted-id Arrow array /
-   bucketed storage-partitioned join, per ``cfg.image_probe``) plus the
+   bucketed storage-partitioned join, selected by the image count against
+   ``IMAGE_PROBE_ARRAY_ABOVE`` / ``IMAGE_PROBE_BUCKETED_ABOVE``) plus the
    deterministic virtual latency/payload lattices in :mod:`config`.
 2. **Payload attachment** at checkpoint time (the ``fetched`` sink joins
    bytes by ``image_id`` — deferred so per-step jobs never move payload

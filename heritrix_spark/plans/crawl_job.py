@@ -91,6 +91,7 @@ import bisect
 import os
 import threading
 import time
+from contextlib import contextmanager
 
 import numpy as np
 import pandas as pd
@@ -285,6 +286,18 @@ def _normalize_queues(pdf: pd.DataFrame) -> pd.DataFrame:
     return pdf.astype(_QUEUE_DTYPES)
 
 
+# Image-existence probe placement, selected in CrawlJob.__init__ from the
+# image count: a broadcast join up to IMAGE_PROBE_ARRAY_ABOVE ids, the
+# once-built sorted-id Arrow array up to IMAGE_PROBE_BUCKETED_ABOVE, and
+# the storage-partitioned probe over IMAGE_PROBE_BUCKETS buckets beyond.
+# The array path's one-time toPandas() of every id is ~80 MB at 10^7
+# (fine) but ~80 GB of driver heap at 10^10 (fatal), so the largest
+# corpora get the probe whose driver memory is O(1).
+IMAGE_PROBE_ARRAY_ABOVE = 200_000
+IMAGE_PROBE_BUCKETED_ABOVE = 10_000_000
+IMAGE_PROBE_BUCKETS = 32
+
+
 class CrawlJob:
     """One crawl: seeds → supersteps → checkpointed engine tables."""
 
@@ -312,14 +325,15 @@ class CrawlJob:
         self.durable_seen = durable_seen
         self.work_dir = work_dir
         self.images = images
-        # Image-existence probe (the FetchHTTP hit/404 decision).  Small
-        # corpora: a broadcast-join against the id column.  Large corpora:
-        # a ONE-TIME sorted numpy id array + Arrow-batched searchsorted
-        # UDF — a per-step broadcast join would rebuild the 10^7-entry
-        # hash relation on the driver EVERY superstep (a ~seconds-long
-        # serial stage that caps core scaling); the probe array builds
-        # once and rides the executors for the whole crawl.  (At 10^10
-        # the storage-partitioned fetch join replaces both — SURVEY §4.)
+        # Image-existence probe (the FetchHTTP hit/404 decision), placed
+        # by corpus size (IMAGE_PROBE_*).  Small corpora: a broadcast-join
+        # against the id column.  Large corpora: a ONE-TIME sorted numpy
+        # id array + Arrow-batched searchsorted UDF — a per-step broadcast
+        # join would rebuild the 10^7-entry hash relation on the driver
+        # EVERY superstep (a ~seconds-long serial stage that caps core
+        # scaling); the probe array builds once and rides the executors
+        # for the whole crawl.  At 10^10 the storage-partitioned fetch
+        # join replaces both (SURVEY §4).
         self._img_exists_udf = None
         self.image_ids = None
         self._images_meta = None
@@ -327,23 +341,8 @@ class CrawlJob:
             raise ValueError(
                 f"queue_state_mode must be one of pandas|dataframe|auto, "
                 f"got {cfg.queue_state_mode!r}")
-        if cfg.image_probe not in ("auto", "broadcast", "array",
-                                   "bucketed"):
-            raise ValueError(
-                f"image_probe must be one of auto|broadcast|array|"
-                f"bucketed, got {cfg.image_probe!r}")
-        probe = cfg.image_probe
-        if probe == "auto":
-            # Tiered by corpus size (round-3 judge wrong #1): broadcast
-            # below 200k ids, executor-resident sorted array to 10^7,
-            # storage-partitioned bucketed probe beyond — the array path's
-            # one-time toPandas() of every id is ~80 MB at 10^7 (fine) but
-            # ~80 GB of driver heap at 10^10 (fatal), so auto must hand
-            # off to the probe whose driver memory is O(1).
-            n_img = images.count()
-            probe = ("bucketed" if n_img > 10_000_000
-                     else "array" if n_img > 200_000 else "broadcast")
-        if probe == "bucketed":
+        n_img = images.count()
+        if n_img > IMAGE_PROBE_BUCKETED_ABOVE:
             # Storage-partitioned probe (SURVEY §4, the 10^10-image path):
             # the id projection is written ONCE as a bucketed+sorted
             # parquet table — an executor-side write, ids never pass
@@ -359,12 +358,12 @@ class CrawlJob:
                 _image_num_expr(F.col("image_id")).alias("image_num"))
              .withColumn("_exists", F.lit(True))
              .write.mode("overwrite")
-             .bucketBy(cfg.image_probe_buckets, "image_num")
+             .bucketBy(IMAGE_PROBE_BUCKETS, "image_num")
              .sortBy("image_num")
              .option("path", os.path.join(work_dir, "img_probe"))
              .format("parquet").saveAsTable(tbl))
             self.image_ids = spark.table(tbl).hint("merge")
-        elif probe == "array":
+        elif n_img > IMAGE_PROBE_ARRAY_ABOVE:
             ks = np.sort(images.select(
                 F.regexp_extract("image_id", r"(\d+)", 1).cast("long")
                 .alias("k")).toPandas()["k"].to_numpy("int64"))
@@ -399,16 +398,16 @@ class CrawlJob:
         self.frontier_cold = spark.createDataFrame([], COLD_SCHEMA)
         self.frontier_cold2 = spark.createDataFrame([], COLD2_SCHEMA)
         self._cold_dirty_steps = 0
-        # Two-tier frontier state (cfg.frontier_tiers): BASE is a
-        # compacted, (class_key, _salt)-partitioned, priority-sorted
-        # columnar cache — the burst window scans it with no Exchange and
+        # Two-tier frontier state (the only frontier layout — it keeps the
+        # per-step shuffle bounded by the burst): BASE is a compacted,
+        # (class_key, _salt)-partitioned, priority-sorted columnar
+        # cache — the burst window scans it with no Exchange and
         # no Sort; DELTA holds rows added since the last compaction;
         # _removed holds the per-step processed-fp frames (lazy slices of
         # the checkpointed burst) that anti-join the base out of scans
         # until compaction folds them in.  frontier_hot stays the logical
         # view (base − removed) ∪ delta for every non-hot-path reader
         # (checkpoint, reports, clock aggregates).
-        self.tiered = cfg.frontier_tiers
         self._base: DataFrame | None = None
         self._base_rows = 0
         self._delta: DataFrame = spark.createDataFrame([], HOT_SCHEMA)
@@ -531,24 +530,18 @@ class CrawlJob:
         full = (full
                 .withColumn("image_num", _image_num_expr(F.col("image_id")))
                 .withColumn("kind_b", _kind_b_expr(F.col("kind"))))
-        self.frontier_hot = self._ck(full.select(*HOT_COLS))
+        # Rebuild the tiers from the flat snapshot: everything starts in
+        # the delta, then one immediate compaction establishes the
+        # partitioned+sorted base (and the frontier_hot view).
+        self._base = None
+        self._delta = self._ck(full.select(*HOT_COLS))
         self.frontier_cold = self._ck(full.select(*COLD_COLS))
         self.frontier_cold2 = self._ck(full.select(*COLD2_COLS))
         self._cold_dirty_steps = 0
-        if self.tiered:
-            # Rebuild the tiers from the flat snapshot: everything starts
-            # in the delta, then one immediate compaction establishes the
-            # partitioned+sorted base.
-            self._base = None
-            self._base_rows = 0
-            self._removed = []
-            self._removed_rows = 0
-            self._delta = self.frontier_hot
-            self._delta_rows = 0
-            self._maybe_compact_tiers(force=True)
-            self._refresh_hot_view()
+        self._maybe_compact_tiers(force=True)
 
-    def _ck(self, df: DataFrame, parts: int | None = None) -> DataFrame:
+    def _ck(self, df: DataFrame, parts: int | None = None,
+            eager: bool = True) -> DataFrame:
         """Materialize with bounded partition count AND bounded statistics.
 
         The per-step state merges are unions; left alone, partition counts
@@ -572,10 +565,17 @@ class CrawlJob:
         materialized RDD as a fresh LogicalRDD drops the origin stats;
         join planning falls to AQE's runtime sizes, and every explicitly
         small side is already ``F.broadcast``-hinted.
+
+        ``eager=False`` materializes on first use (ZERO dedicated jobs):
+        the first consuming job computes and persists the RDD, every later
+        consumer scans the blocks — for small per-step frames whose first
+        consumer is itself a materialization (e.g. new rows folded into
+        the delta merge), where an eager checkpoint would pay a whole
+        extra job of fixed task/codegen overhead.
         """
         n = parts or int(self.spark.conf.get("spark.sql.shuffle.partitions",
                                              "8"))
-        out = df.coalesce(n).localCheckpoint(eager=True)
+        out = df.coalesce(n).localCheckpoint(eager=eager)
         try:
             jdf = out._jdf
             fresh = self.spark._jsparkSession.internalCreateDataFrame(
@@ -583,58 +583,16 @@ class CrawlJob:
             return DataFrame(fresh, self.spark)
         except Exception:  # non-classic sessions: keep the checkpoint
             return out
-
-    def _ck_lazy(self, df: DataFrame, parts: int | None = None) -> DataFrame:
-        """Materialize-on-first-use checkpoint (same stats firewall as
-        :meth:`_ck`, ZERO dedicated jobs): the first consuming job
-        computes and persists the RDD, every later consumer scans the
-        blocks — used for small per-step frames whose first consumer is
-        itself a materialization (e.g. new rows folded into the delta
-        merge), where an eager checkpoint would pay a whole extra job of
-        fixed task/codegen overhead."""
-        n = parts or int(self.spark.conf.get("spark.sql.shuffle.partitions",
-                                             "8"))
-        out = df.coalesce(n).localCheckpoint(eager=False)
-        try:
-            jdf = out._jdf
-            fresh = self.spark._jsparkSession.internalCreateDataFrame(
-                jdf.queryExecution().toRdd(), jdf.schema(), False)
-            return DataFrame(fresh, self.spark)
-        except Exception:  # non-classic sessions: keep the checkpoint
-            return out
-
-    def _collect_async(self, df: DataFrame):
-        """Launch ``df.collect()`` on a daemon thread and return a join
-        callable — used to OVERLAP independent per-step jobs (Spark's
-        scheduler interleaves the concurrent jobs' tasks; Py4J and job
-        submission are thread-safe).  Only safe for plans whose inputs
-        are already materialized and while no session conf is being
-        mutated (the superstep's conf toggles all happen after every
-        async join).  Exceptions re-raise at join."""
-        out: dict = {}
-
-        def run():
-            try:
-                out["rows"] = df.collect()
-            except BaseException as e:  # noqa: BLE001 — re-raised at join
-                out["err"] = e
-
-        th = threading.Thread(target=run, daemon=True)
-        th.start()
-
-        def join():
-            th.join()
-            if "err" in out:
-                raise out["err"]
-            return out["rows"]
-
-        return join
 
     def _run_async(self, fn):
         """Run ``fn`` (a Spark action over an ALREADY-BUILT plan) on a
-        daemon thread; returns a join callable.  Same safety contract as
-        :meth:`_collect_async`: inputs materialized, no session conf
-        mutation until joined."""
+        daemon thread and return a join callable — used to OVERLAP
+        independent per-step jobs (Spark's scheduler interleaves the
+        concurrent jobs' tasks; Py4J and job submission are thread-safe).
+        Only safe for plans whose inputs are already materialized and
+        while no session conf is being mutated (the superstep's conf
+        toggles all happen after every async join).  Exceptions re-raise
+        at join."""
         out: dict = {}
 
         def run():
@@ -654,6 +612,21 @@ class CrawlJob:
 
         return join
 
+    @contextmanager
+    def _aqe_off(self, off: bool = True):
+        """Run the block with ``spark.sql.adaptive.enabled`` off (when
+        ``off``), restoring the session's value after it."""
+        key = "spark.sql.adaptive.enabled"
+        aqe = self.spark.conf.get(key, "true")
+        off = off and aqe == "true"
+        if off:
+            self.spark.conf.set(key, "false")
+        try:
+            yield
+        finally:
+            if off:
+                self.spark.conf.set(key, aqe)
+
     def _release_step_cache(self) -> None:
         """Free the per-step candidate-batch cache once the final
         candidate frame has materialized (its BHJ probe side no longer
@@ -665,6 +638,27 @@ class CrawlJob:
     # ----------------------------------------------------- frontier tiers
 
     _BASE_ORDER = ["class_key", "_salt", "directive", "cost", "ordinal"]
+    # Adaptive salting crossover.  Spark's InferWindowGroupLimit already
+    # inserts a MAP-SIDE partial top-k below the window's Exchange, so
+    # even unsalted, a hot queue's final window group is bounded by
+    # (#map partitions × burst_max) rows — when that bound is small the
+    # phase-1 salt pass is pure overhead (an extra full-frontier shuffle
+    # + sort per superstep).  The burst therefore runs single-phase
+    # whenever #shuffle_partitions × burst_max <= _SALT_AUTO_ROWS, and
+    # two-phase salted above it (the 10^5-partition cluster regime,
+    # where the unsalted bound would be 10^8 rows in one task).
+    _SALT_AUTO_ROWS = 262_144
+    # Major compaction when (since-compaction removed + delta) exceeds
+    # this fraction of the base — bounds both the broadcast anti-join size
+    # and the delta window's exchange, and amortizes the one full-frontier
+    # exchange+sort to once per ~1/frac of the frontier turning over.
+    _COMPACT_FRAC = 0.25
+    # Minor compaction (the removal chain folded into the base by a
+    # narrow, shuffle-free, sort-free rewrite) when the accumulated
+    # removed fps exceed this fraction of the base.  Bounds the removal
+    # broadcast (which every per-step job rebuilds) without paying the
+    # major compaction's full exchange+sort.
+    _MINOR_FRAC = 0.08
 
     def _salt_expr(self) -> Column:
         s = max(1, self.cfg.partition_salt)
@@ -700,42 +694,43 @@ class CrawlJob:
             self.frontier_hot = (live.drop("_salt")
                                  .unionByName(self._delta))
 
+    def _install_base(self, src: DataFrame) -> None:
+        """Checkpoint ``src`` as the new base, recount it and reset the
+        removal chain (which ``src`` has already folded in).
+
+        localCheckpoint, NOT persist: it truncates the logical plan to a
+        LogicalRDD (otherwise every compaction's plan nests the previous
+        base's full tree and Catalyst re-analysis grows quadratically
+        across compactions) while still carrying the physical plan's
+        outputPartitioning + outputOrdering — the no-Exchange/no-Sort
+        burst property survives the truncation.  AQE must be OFF while
+        the checkpoint materializes: under AQE the executed plan is an
+        AdaptiveSparkPlanExec whose partitioning/ordering do not reach
+        the LogicalRDD (measured: the burst then re-shuffles + re-sorts
+        the whole base every step), and a persist()-based base loses its
+        HashPartitioning the same way."""
+        with self._aqe_off():
+            new_base = src.localCheckpoint(eager=True)
+        self._base_rows = new_base.count()
+        self._base = new_base
+        self._removed = []
+        self._removed_rows = 0
+
     def _maybe_compact_tiers(self, force: bool = False) -> None:
         """Fold delta + removals into a fresh base when they outgrow
-        ``frontier_compact_frac`` of it — the ONE amortized full-frontier
+        ``_COMPACT_FRAC`` of it — the ONE amortized full-frontier
         exchange+sort; every per-step exchange stays bounded by
         burst + discoveries."""
         turn = self._removed_rows + self._delta_rows
         if not force and turn <= max(
-                self.cfg.frontier_compact_frac * self._base_rows, 1):
+                self._COMPACT_FRAC * self._base_rows, 1):
             return
         live = self._base_live()
         d = self._delta.withColumn("_salt", self._salt_expr())
         src = d if live is None else live.unionByName(d)
         n = int(self.spark.conf.get("spark.sql.shuffle.partitions", "8"))
-        # localCheckpoint, NOT persist: it truncates the logical plan to a
-        # LogicalRDD (otherwise every compaction's plan nests the previous
-        # base's full tree and Catalyst re-analysis grows quadratically
-        # across compactions) while still carrying the physical plan's
-        # outputPartitioning + outputOrdering — the no-Exchange/no-Sort
-        # burst property survives the truncation.  AQE must be OFF while
-        # the checkpoint materializes: under AQE the executed plan is an
-        # AdaptiveSparkPlanExec whose partitioning/ordering do not reach
-        # the LogicalRDD (measured: the burst then re-shuffles + re-sorts
-        # the whole base every step), and a persist()-based base loses its
-        # HashPartitioning the same way.
-        aqe = self.spark.conf.get("spark.sql.adaptive.enabled", "true")
-        self.spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try:
-            new_base = (src.repartition(n, "class_key", "_salt")
-                        .sortWithinPartitions(*self._BASE_ORDER)
-                        .localCheckpoint(eager=True))
-        finally:
-            self.spark.conf.set("spark.sql.adaptive.enabled", aqe)
-        self._base_rows = new_base.count()
-        self._base = new_base
-        self._removed = []
-        self._removed_rows = 0
+        self._install_base(src.repartition(n, "class_key", "_salt")
+                           .sortWithinPartitions(*self._BASE_ORDER))
         self._delta = self.spark.createDataFrame([], HOT_SCHEMA)
         self._delta_rows = 0
         self._refresh_hot_view()
@@ -743,27 +738,15 @@ class CrawlJob:
     def _maybe_minor_compact(self) -> None:
         """Fold the removal chain into the base with a NARROW rewrite —
         broadcast anti-join + localCheckpoint, no Exchange, no Sort (both
-        partitioning and ordering survive, same AQE-off mechanics as the
-        major compaction).  Keeps the removal broadcast — which every
-        per-step job touching the frontier rebuilds — bounded by
-        ``frontier_minor_frac`` of the base instead of growing without
-        bound between major compactions."""
+        partitioning and ordering survive the checkpoint).  Keeps the
+        removal broadcast — which every per-step job touching the
+        frontier rebuilds — bounded by ``_MINOR_FRAC`` of the base instead
+        of growing without bound between major compactions."""
         if self._base is None or not self._removed:
             return
-        if (self._removed_rows
-                <= self.cfg.frontier_minor_frac * self._base_rows):
+        if self._removed_rows <= self._MINOR_FRAC * self._base_rows:
             return
-        live = self._base_live()
-        aqe = self.spark.conf.get("spark.sql.adaptive.enabled", "true")
-        self.spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try:
-            new_base = live.localCheckpoint(eager=True)
-        finally:
-            self.spark.conf.set("spark.sql.adaptive.enabled", aqe)
-        self._base_rows = new_base.count()
-        self._base = new_base
-        self._removed = []
-        self._removed_rows = 0
+        self._install_base(self._base_live())
 
     def _burst_topk_tiered(self, qdf: DataFrame, now: int,
                            salt: int) -> DataFrame:
@@ -1003,15 +986,11 @@ class CrawlJob:
             fin = fin.unionByName(pre)
         new_rows = self._ck(fin)
         self._journal_scheduled(new_rows)
-        if self.tiered:
-            self._delta = self._ck(
-                self._delta.unionByName(new_rows.select(*HOT_COLS)))
-            self._delta_rows += n_new
-            self._maybe_compact_tiers()
-            self._refresh_hot_view()
-        else:
-            self.frontier_hot = self._ck(
-                self.frontier_hot.unionByName(new_rows.select(*HOT_COLS)))
+        self._delta = self._ck(
+            self._delta.unionByName(new_rows.select(*HOT_COLS)))
+        self._delta_rows += n_new
+        self._maybe_compact_tiers()
+        self._refresh_hot_view()
         self.frontier_cold = self._ck(
             self.frontier_cold.unionByName(new_rows.select(*COLD_COLS)))
         self.frontier_cold2 = self._ck(
@@ -1811,15 +1790,8 @@ class CrawlJob:
         its queue-dimension joins are deliberately un-hinted so runtime
         sizes pick broadcast vs shuffle as the queue table grows past
         driver bounds."""
-        aqe = self.spark.conf.get("spark.sql.adaptive.enabled", "true")
-        aqe_off = self.qmode != "dataframe" and aqe == "true"
-        if aqe_off:
-            self.spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try:
+        with self._aqe_off(self.qmode != "dataframe"):
             return self._superstep_impl()
-        finally:
-            if aqe_off:
-                self.spark.conf.set("spark.sql.adaptive.enabled", aqe)
 
     def _superstep_impl(self) -> int:
         """Run one superstep; returns number of processed rows.
@@ -1868,30 +1840,17 @@ class CrawlJob:
         # phase-1 salt pass (an extra shuffle + sort of its input) only
         # engages when the unsalted map-side bound
         # (#shuffle_partitions × burst_max) would overload the final
-        # window's hot-key task — see CrawlConfig.salt_auto_rows.
+        # window's hot-key task — see CrawlJob._SALT_AUTO_ROWS.
         salt = cfg.partition_salt
-        if salt > 1 and cfg.salt_auto_rows:
+        if salt > 1:
             width = int(self.spark.conf.get(
                 "spark.sql.shuffle.partitions", "8"))
-            if width * cfg.burst_max <= cfg.salt_auto_rows:
+            if width * cfg.burst_max <= self._SALT_AUTO_ROWS:
                 salt = 1
         w = Window.partitionBy("class_key").orderBy(
             "directive", "cost", "ordinal")
-        if self.tiered:
-            a = (self._burst_topk_tiered(qdf, now, salt)
-                 .withColumn("_rn", F.col("_rn") - 1))
-        else:
-            elig = self.frontier_hot.join(self._maybe_bcast(qdf),
-                                          "class_key")
-            elig = elig.where(F.col("earliest_ts")
-                              <= F.greatest(F.col("wake_ts"),
-                                            F.col("_now")))
-            a = (top_k_per_queue(
-                    elig, ["class_key"],
-                    [F.col("directive"), F.col("cost"), F.col("ordinal")],
-                    cfg.burst_max, rank_col="_rn", salt_col="url_fp",
-                    salt_count=salt)
-                 .withColumn("_rn", F.col("_rn") - 1))
+        a = (self._burst_topk_tiered(qdf, now, salt)
+             .withColumn("_rn", F.col("_rn") - 1))
 
         # Preselector re-check (P1): re-apply the CURRENT scope fold to
         # the bounded burst.  Needs URL strings, so the burst joins the
@@ -2047,9 +2006,8 @@ class CrawlJob:
         n_ok = int(sel_obs.get["n_ok"] or 0)
         _mark("burst_ck")
 
-        # finished(): retry re-enqueue rows (shared by both frontier
-        # layouts; built here so the tiered delta merge below can start
-        # before the candidate pipeline).
+        # finished(): retry re-enqueue rows (built here so the delta
+        # merge below can start before the candidate pipeline).
         retry = (sel.where(F.col("event") == C.EV_RETRY)
                  .withColumn("retries", (F.col("retries") + 1).cast("int"))
                  .withColumn("earliest_ts",
@@ -2057,25 +2015,21 @@ class CrawlJob:
                               + F.lit(cfg.retry_delay_ms)).cast("long"))
                  .select(*HOT_COLS))
         sel_fps = sel.select("url_fp")
-        delta_fut = None
-        if self.tiered:
-            # Tiered delta merge, processed-removal + retry half: its
-            # only input is the materialized burst, so the job runs on a
-            # daemon thread OVERLAPPED with the candidate pipeline (the
-            # same pattern as the clock-input scan) instead of as a
-            # dedicated ~2 s serial phase at step end; the step's new
-            # discoveries union in lazily once the merge decisions are
-            # known.  Shuffle-hash, not broadcast: both sides are small
-            # (delta ~10^5 narrow rows, burst fps ~8 B each), so two
-            # parallel exchanges beat a driver-serial broadcast
-            # collect+build.  The base-side removal anti-join keeps its
-            # broadcast — its stream side is the whole base and must not
-            # exchange.
-            merged_base = (self._delta.join(sel_fps.hint("shuffle_hash"),
-                                            "url_fp", "left_anti")
-                           .unionByName(retry))
-            delta_fut = self._run_async(
-                lambda: self._ck(merged_base, parts=8))
+        # Delta merge, processed-removal + retry half: its only input is
+        # the materialized burst, so the job runs on a daemon thread
+        # OVERLAPPED with the candidate pipeline (the same pattern as the
+        # clock-input scan) instead of as a dedicated ~2 s serial phase at
+        # step end; the step's new discoveries union in lazily once the
+        # merge decisions are known.  Shuffle-hash, not broadcast: both
+        # sides are small (delta ~10^5 narrow rows, burst fps ~8 B each),
+        # so two parallel exchanges beat a driver-serial broadcast
+        # collect+build.  The base-side removal anti-join keeps its
+        # broadcast — its stream side is the whole base and must not
+        # exchange.
+        merged_base = (self._delta.join(sel_fps.hint("shuffle_hash"),
+                                        "url_fp", "left_anti")
+                       .unionByName(retry))
+        delta_fut = self._run_async(lambda: self._ck(merged_base, parts=8))
 
         # pandas mode: the clock-input scan (per-queue min-earliest of
         # untouched frontier rows) depends only on the materialized burst
@@ -2091,7 +2045,7 @@ class CrawlJob:
                                "url_fp", "left_anti")
                          .groupBy("class_key")
                          .agg(F.min("earliest_ts").alias("ome")))
-            rem_fut = self._collect_async(rem_stats)
+            rem_fut = self._run_async(rem_stats.collect)
 
         # --- post-fetch decide rules (S10) over the bounded ok-set --------
         pf = self._postfetch_flags(sel)
@@ -2267,8 +2221,8 @@ class CrawlJob:
         # the cold table just appends the new rows' strings — retry rows'
         # strings are already present, removed rows' strings are dropped
         # lazily at checkpoint-time compaction.  (``retry`` was built
-        # right after the burst so the tiered delta merge could overlap
-        # the candidate pipeline.)
+        # right after the burst so the delta merge could overlap the
+        # candidate pipeline.)
         # One materialization of the step's new rows (strings included):
         # journal, seen delta, hot merge and the cold append all read this
         # frame — the cold union chain is then pure materialized scans,
@@ -2306,41 +2260,33 @@ class CrawlJob:
                 # and pins this frame; the seen delta, cold appends and
                 # journal then scan the blocks instead of re-running the
                 # fix-up windows.
-                new_rows = self._ck_lazy(
+                new_rows = self._ck(
                     c.join(adf, "class_key", "left_anti")
-                    .select(*NEW_COLS).unionByName(fin), parts=8)
+                    .select(*NEW_COLS).unionByName(fin), parts=8,
+                    eager=False)
             else:
                 new_rows = c.select(*NEW_COLS)
             self._journal_scheduled(new_rows)
         _mark("new_rows_ck")
-        if self.tiered:
-            # Tiered merge: processed fps join the removal chain (base
-            # rows leave via broadcast anti-join until compaction); the
-            # small delta alone is rewritten — retry re-enqueues were
-            # merged by the overlapped job launched after the burst, and
-            # the step's new rows union in LAZILY (their non-eager
-            # checkpoint materializes under the seen-delta write / next
-            # consuming job).  The untouched base is never copied.
-            self._removed.append(sel_fps)
-            self._removed_rows += n_processed
-            base_delta = delta_fut()
-            if n_new:
-                self._delta = base_delta.unionByName(
-                    new_rows.select(*HOT_COLS))
-                self._delta_rows += n_new
-            else:
-                self._delta = base_delta
-            _mark("delta_ck")
-            self._maybe_compact_tiers()
-            self._maybe_minor_compact()
-            self._refresh_hot_view()
+        # Processed fps join the removal chain (base rows leave via
+        # broadcast anti-join until compaction); the small delta alone is
+        # rewritten — retry re-enqueues were merged by the overlapped job
+        # launched after the burst, and the step's new rows union in
+        # LAZILY (their non-eager checkpoint materializes under the
+        # seen-delta write / next consuming job).  The untouched base is
+        # never copied.
+        self._removed.append(sel_fps)
+        self._removed_rows += n_processed
+        base_delta = delta_fut()
+        if n_new:
+            self._delta = base_delta.unionByName(new_rows.select(*HOT_COLS))
+            self._delta_rows += n_new
         else:
-            removed = self.frontier_hot.join(
-                F.broadcast(sel.select("url_fp")), "url_fp", "left_anti")
-            merged = removed.unionByName(retry)
-            if n_new:
-                merged = merged.unionByName(new_rows.select(*HOT_COLS))
-            self.frontier_hot = self._ck(merged)
+            self._delta = base_delta
+        _mark("delta_ck")
+        self._maybe_compact_tiers()
+        self._maybe_minor_compact()
+        self._refresh_hot_view()
         if n_new:
             self.frontier_cold = self.frontier_cold.unionByName(
                 new_rows.select(*COLD_COLS))

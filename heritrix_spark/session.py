@@ -28,6 +28,19 @@ import re
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """Driver heap when ``$SPARK_DRIVER_MEM`` is unset: half the machine's
+    physical memory, capped at 48g.  Local mode runs the whole engine in
+    the driver JVM, and a heap cap above physical memory lets the heap
+    grow until the kernel OOM-kills the JVM (a -Xmx48g test session on a
+    16 GB machine was killed at 15 GB resident midway through the suite)."""
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError):
+        return "48g"
+    return f"{max(1, min(48, phys // 2**31))}g"
+
+
 def get_spark(
     app_name: str = "heritrix_spark",
     cores: int | None = None,
@@ -58,7 +71,8 @@ def get_spark(
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM", _default_driver_mem()))
         .config("spark.ui.enabled", "false")
         # Engine arithmetic (hash-derived ints) relies on Java long semantics.
         .config("spark.sql.ansi.enabled", "false")

@@ -81,9 +81,3 @@ def test_bad_queue_state_mode_rejected(spark, tmp_path):
     with pytest.raises(ValueError, match="queue_state_mode"):
         _mk_job(spark, tmp_path,
                 C.CrawlConfig(queue_state_mode="datframe"), "fixb4")
-
-
-def test_bad_image_probe_rejected(spark, tmp_path):
-    with pytest.raises(ValueError, match="image_probe"):
-        _mk_job(spark, tmp_path,
-                C.CrawlConfig(image_probe="bucket"), "fixb5")

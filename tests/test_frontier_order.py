@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from heritrix_spark import config as C
 from heritrix_spark.fixtures import gen, websim
 from heritrix_spark.oracle.heritrix_sim import HeritrixSim
+from heritrix_spark.plans import crawl_job
 from heritrix_spark.plans.crawl_job import CrawlJob
 
 EVENT_KEY = ["class_key", "url", "canon_url", "kind", "directive", "cost",
@@ -325,15 +326,25 @@ def test_host_settings_overrides_equivalence(spark, tmp_path, qmode):
     assert any(q.sgroup == 2 for q in sim.queues.values())
 
 
-def test_bucketed_image_probe_equivalence_and_plan(spark, tmp_path):
-    """image_probe='bucketed' (the 10^10-image path): the id projection is
-    written once as a bucketed+sorted table, the crawl is event-identical
-    to the oracle, and the per-step probe join has NO Exchange and NO Sort
-    on the images side — only the work-proportional burst shuffles."""
+@pytest.mark.parametrize("probe", ["bucketed", "array"])
+def test_bucketed_image_probe_equivalence_and_plan(spark, tmp_path,
+                                                   monkeypatch, probe):
+    """The size-selected image probes that the tiny fixture is too small
+    to reach, forced by zeroing their thresholds: the crawl is
+    event-identical to the oracle under the sorted-id Arrow array (200k to
+    10^7 images) and the bucketed storage-partitioned probe (the
+    10^10-image path).  Bucketed also writes the id projection once as a
+    bucketed+sorted table, and its per-step probe join has NO Exchange
+    and NO Sort on the images side — only the work-proportional burst
+    shuffles."""
+    if probe == "bucketed":
+        monkeypatch.setattr(crawl_job, "IMAGE_PROBE_BUCKETED_ABOVE", 0)
+        monkeypatch.setattr(crawl_job, "IMAGE_PROBE_BUCKETS", 8)
+    else:
+        monkeypatch.setattr(crawl_job, "IMAGE_PROBE_ARRAY_ABOVE", 0)
     spec = websim.SPECS["tiny"]
     paths = gen.write_fixture(spec, str(tmp_path / "fix_bp"))
-    cfg = C.CrawlConfig(surt_prefixes=websim.scope_surt_prefixes(),
-                        image_probe="bucketed", image_probe_buckets=8)
+    cfg = C.CrawlConfig(surt_prefixes=websim.scope_surt_prefixes())
     sim = HeritrixSim(spec, cfg)
     sim.schedule_seeds(websim.seeds(spec))
     sim.run(8)
@@ -345,6 +356,9 @@ def test_bucketed_image_probe_equivalence_and_plan(spark, tmp_path):
     job.schedule_seeds(websim.seeds(spec))
     job.run(8)
     _assert_equal(sim, job)
+    if probe == "array":
+        assert job._img_exists_udf is not None and job.image_ids is None
+        return
     # Plan shape: storage-partitioned probe join — bucketed scan on the
     # images side (no Exchange, no Sort), one Exchange total (burst side).
     burst = spark.range(500).select(F.col("id").alias("image_num"))
@@ -388,17 +402,6 @@ def test_small_prefix_equivalence(spark, tmp_path):
     cfg = C.CrawlConfig(surt_prefixes=websim.scope_surt_prefixes())
     sim, job = _run_pair(spark, tmp_path, "small", cfg, 12)
     _assert_equal(sim, job)
-
-
-def test_frontier_tiers_off_equivalence(spark, tmp_path):
-    """The single-frame fallback (frontier_tiers=False) implements the
-    identical superstep law — the tiered default is equivalence-tested by
-    every other test in this file; this one guards the fallback."""
-    cfg = C.CrawlConfig(surt_prefixes=websim.scope_surt_prefixes(),
-                        cost_policy="wag", frontier_tiers=False)
-    sim, job = _run_pair(spark, tmp_path, "tiny", cfg, None)
-    _assert_equal(sim, job)
-    assert job.done
 
 
 def test_tiered_base_no_shuffle_no_sort(spark, tmp_path):
