@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from heritrix_spark.functions.fingerprint import hash_str_py, url_fp_expr
+from heritrix_spark.session import local_frame
 
 BLOOM_K = 4
 
@@ -156,8 +157,8 @@ class SeenFilter:
                  use_bloom: bool = False,
                  bloom_expected: int = 1_000_000, bloom_fpp: float = 0.03):
         self.spark = spark
-        self.seen = seen if seen is not None else spark.createDataFrame(
-            [], "url_fp long, canon_url string")
+        self.seen = seen if seen is not None else local_frame(
+            spark, [], "url_fp long, canon_url string")
         self.use_bloom = use_bloom
         self.bloom_expected = bloom_expected
         self.bloom_fpp = bloom_fpp
@@ -235,7 +236,7 @@ class SeenFilter:
         """UriUniqFilter.forget.  The bloom bitmap is left as-is: a stale
         bit only routes the fingerprint through the exact anti-join, which
         no longer contains it — prefilter staleness is always safe."""
-        gone = self.spark.createDataFrame(
-            [(u,) for u in canon_urls], "canon_url string")
+        gone = local_frame(self.spark, [(u,) for u in canon_urls],
+                           "canon_url string")
         self.seen = self.seen.join(gone, "canon_url",
                                    "left_anti").localCheckpoint()

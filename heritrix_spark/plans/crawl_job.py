@@ -61,6 +61,15 @@ never enter a per-step shuffle):
     snapshot + manifest line every checkpoint_interval steps (exact
     resume — Iceberg-snapshot analog via SnapshotCatalog)
 
+Driver-built frames (the clock and step tags, queue-merge updates, kill
+and prerequisite rows, empty frames) go through
+:func:`heritrix_spark.session.local_frame` — an Arrow ``LocalRelation``
+scanned by a ``LocalTableScan`` — never ``createDataFrame(<python list>)``,
+which in classic PySpark is a PythonRDD: every plan reading it would launch
+a Python-worker job (0.2-0.6 s each, several per superstep).  Frames built
+from pandas go through Arrow too (``_pandas_frame``, which also keeps an
+empty pandas frame off PySpark's list path).
+
 State placement: the frontier, seen set, candidate batches and payloads —
 everything O(URLs) — live in DataFrames, hash-partitioned by class_key /
 canonical-URL fingerprint (bucketed storage-partitioned joins on a real
@@ -123,6 +132,7 @@ from heritrix_spark.operators.extract import image_id_expr, outlinks_of
 from heritrix_spark.operators.postfetch import gate_expr
 from heritrix_spark.operators.schedule import top_k_per_queue
 from heritrix_spark.operators.scope import scope_accepts_expr
+from heritrix_spark.session import local_frame
 from heritrix_spark.sources.catalog import SnapshotCatalog
 
 FRONTIER_FIELDS = [
@@ -235,6 +245,9 @@ _ORD = ["_ord_ck", "_ord_rn", "_ord_j"]  # total candidate arrival order
 # collide with other prereq canons.
 _PSHAPE_RE = r"^(dns:|https?://[^/?#]*/robots\.txt$)"
 
+# URL-seen set rows.
+SEEN_SCHEMA = "url_fp long, canon_url string"
+
 # Candidate-input schema (LinksScoper input rows).
 CAND_SCHEMA = ("url string, hops_path string, via string, is_seed boolean,"
                " directive int, earliest_ts long, _ord_ck string,"
@@ -284,6 +297,16 @@ ip_of_host = ip_of_host_py
 def _normalize_queues(pdf: pd.DataFrame) -> pd.DataFrame:
     """Re-pin dtypes after pandas .loc inserts (which coerce to object)."""
     return pdf.astype(_QUEUE_DTYPES)
+
+
+def _pandas_frame(spark: SparkSession, pdf: pd.DataFrame,
+                  schema: str) -> DataFrame:
+    """A driver-resident pandas table as an Arrow ``LocalRelation``.
+    PySpark converts an EMPTY pandas frame through its list path (a
+    PythonRDD), so that case is an empty :func:`local_frame`."""
+    if len(pdf):
+        return spark.createDataFrame(pdf, schema)
+    return local_frame(spark, [], schema)
 
 
 # Image-existence probe placement, selected in CrawlJob.__init__ from the
@@ -394,9 +417,9 @@ class CrawlJob:
         self.now = 0
         self.step = 0
         self.done = False
-        self.frontier_hot = spark.createDataFrame([], HOT_SCHEMA)
-        self.frontier_cold = spark.createDataFrame([], COLD_SCHEMA)
-        self.frontier_cold2 = spark.createDataFrame([], COLD2_SCHEMA)
+        self.frontier_hot = local_frame(spark, [], HOT_SCHEMA)
+        self.frontier_cold = local_frame(spark, [], COLD_SCHEMA)
+        self.frontier_cold2 = local_frame(spark, [], COLD2_SCHEMA)
         self._cold_dirty_steps = 0
         # Two-tier frontier state (the only frontier layout — it keeps the
         # per-step shuffle bounded by the burst): BASE is a compacted,
@@ -410,7 +433,7 @@ class CrawlJob:
         # (checkpoint, reports, clock aggregates).
         self._base: DataFrame | None = None
         self._base_rows = 0
-        self._delta: DataFrame = spark.createDataFrame([], HOT_SCHEMA)
+        self._delta: DataFrame = local_frame(spark, [], HOT_SCHEMA)
         self._delta_rows = 0
         self._removed: list[DataFrame] = []
         self._removed_rows = 0
@@ -431,8 +454,8 @@ class CrawlJob:
                       else cfg.queue_state_mode)
         self.queues = _empty_queue_pdf()
         self.host_state = _empty_host_pdf()
-        self.queues_sdf = spark.createDataFrame([], QUEUE_SCHEMA)
-        self.host_state_sdf = spark.createDataFrame([], HOST_STATE_SCHEMA)
+        self.queues_sdf = local_frame(spark, [], QUEUE_SCHEMA)
+        self.host_state_sdf = local_frame(spark, [], HOST_STATE_SCHEMA)
         if durable_seen:
             # Durable URL-seen as a BUCKETED table keyed by url_fp — the
             # local analog of Iceberg `PARTITIONED BY (bucket(N, url_fp))`
@@ -446,13 +469,11 @@ class CrawlJob:
                                           work_dir.lower())[-48:])
             self._seen_path = f"{work_dir}/seen_bucketed"
             spark.sql(f"DROP TABLE IF EXISTS {self._seen_table}")
-            self._seen_write(
-                spark.createDataFrame([], "url_fp long, canon_url string"),
-                mode="overwrite")
+            self._seen_write(local_frame(spark, [], SEEN_SCHEMA),
+                             mode="overwrite")
             self.seen = spark.table(self._seen_table)
         else:
-            self.seen = spark.createDataFrame(
-                [], "url_fp long, canon_url string")
+            self.seen = local_frame(spark, [], SEEN_SCHEMA)
         self._pending: dict[str, list[DataFrame]] = {
             "lineage": [], "scheduled": [], "fetched": [], "seen": [],
             "metrics": []}
@@ -731,7 +752,7 @@ class CrawlJob:
         n = int(self.spark.conf.get("spark.sql.shuffle.partitions", "8"))
         self._install_base(src.repartition(n, "class_key", "_salt")
                            .sortWithinPartitions(*self._BASE_ORDER))
-        self._delta = self.spark.createDataFrame([], HOT_SCHEMA)
+        self._delta = local_frame(self.spark, [], HOT_SCHEMA)
         self._delta_rows = 0
         self._refresh_hot_view()
 
@@ -748,9 +769,8 @@ class CrawlJob:
             return
         self._install_base(self._base_live())
 
-    def _burst_topk_tiered(self, qdf: DataFrame, now: int,
-                           salt: int) -> DataFrame:
-        """Per-queue priority top-k over the tiered frontier.
+    def _burst_topk(self, qdf: DataFrame, salt: int) -> DataFrame:
+        """Per-queue priority top-k over the two-tier frontier.
 
         Base side: window + WindowGroupLimit directly over the cached
         (class_key, _salt)-partitioned, priority-sorted base — NO
@@ -864,12 +884,11 @@ class CrawlJob:
         :meth:`_maybe_promote_queue_state` for the auto-mode law; the
         seed path also calls this directly when a seed batch alone would
         cross the threshold)."""
-        self.queues_sdf = self._ck(self.spark.createDataFrame(
-            _normalize_queues(self.queues)[QUEUE_COLS], QUEUE_SCHEMA))
-        self.host_state_sdf = self._ck(self.spark.createDataFrame(
-            self.host_state[HOST_STATE_COLS], HOST_STATE_SCHEMA)
-            if len(self.host_state)
-            else self.spark.createDataFrame([], HOST_STATE_SCHEMA))
+        self.queues_sdf = self._ck(_pandas_frame(
+            self.spark, _normalize_queues(self.queues)[QUEUE_COLS],
+            QUEUE_SCHEMA))
+        self.host_state_sdf = self._ck(_pandas_frame(
+            self.spark, self.host_state[HOST_STATE_COLS], HOST_STATE_SCHEMA))
         self.qmode = "dataframe"
         self.queues = _empty_queue_pdf()
         self.host_state = _empty_host_pdf()
@@ -882,13 +901,10 @@ class CrawlJob:
     def _queues_df(self, cols: list[str]) -> DataFrame:
         if self.qmode == "dataframe":
             return self.queues_sdf.select(*cols)
-        pdf = self.queues[cols]
-        if len(pdf) == 0:
-            schema = ", ".join(
-                f"{c} {'string' if c == 'class_key' else 'boolean' if c == 'retired' else 'long'}"
-                for c in cols)
-            return self.spark.createDataFrame([], schema)
-        return self.spark.createDataFrame(pdf)
+        schema = ", ".join(
+            f"{c} {'string' if c == 'class_key' else 'boolean' if c == 'retired' else 'long'}"
+            for c in cols)
+        return _pandas_frame(self.spark, self.queues[cols], schema)
 
     def _live_queue_frame(self, qcols: list[str],
                           now: int | None = None) -> DataFrame:
@@ -905,23 +921,18 @@ class CrawlJob:
         if self.qmode == "dataframe":
             q = self.queues_sdf.where(~F.col("retired")).select(*qcols)
             if now is not None:
-                clock = self.spark.createDataFrame(
-                    [(int(now), int(self.step))], "_now long, _step long")
+                clock = local_frame(self.spark, [(int(now), int(self.step))],
+                                    "_now long, _step long")
                 q = q.crossJoin(F.broadcast(clock))
             return q
-        live = self.queues[~self.queues["retired"]]
-        if len(live):
-            live = live[qcols]
-            if now is not None:
-                live = live.assign(_now=np.int64(now),
-                                   _step=np.int64(self.step))
-            return self.spark.createDataFrame(live)
+        live = self.queues.loc[~self.queues["retired"], qcols]
         schema = ", ".join(
             f"{c} {'string' if c == 'class_key' else 'long'}"
             for c in qcols)
         if now is not None:
+            live = live.assign(_now=np.int64(now), _step=np.int64(self.step))
             schema += ", _now long, _step long"
-        return self.spark.createDataFrame([], schema)
+        return _pandas_frame(self.spark, live, schema)
 
     def _maybe_bcast(self, df: DataFrame) -> DataFrame:
         """Broadcast hint for queue-dimension joins — pandas mode only.
@@ -935,11 +946,7 @@ class CrawlJob:
     def schedule_seeds(self, seed_urls: list[str]) -> None:
         rows = [(u, "", "", True, C.MEDIUM, 0, "", 0, i)
                 for i, u in enumerate(seed_urls)]
-        cand = self.spark.createDataFrame(
-            rows, "url string, hops_path string, via string, is_seed boolean,"
-                  " directive int, earliest_ts long, _ord_ck string,"
-                  " _ord_rn int, _ord_j int")
-        self.schedule_seed_frame(cand)
+        self.schedule_seed_frame(local_frame(self.spark, rows, CAND_SCHEMA))
 
     def schedule_seed_frame(self, cand: DataFrame) -> None:
         """Seed injection from a DataFrame of candidate-schema rows — the
@@ -1037,8 +1044,9 @@ class CrawlJob:
         kdf = (F.broadcast(kills.select("canon_url")
                            .dropDuplicates(["canon_url"]))
                if isinstance(kills, DataFrame) else
-               F.broadcast(self.spark.createDataFrame(
-                   [(k,) for k in sorted(kills)], "canon_url string"))
+               F.broadcast(local_frame(
+                   self.spark, [(k,) for k in sorted(kills)],
+                   "canon_url string"))
                if kills else None)
         if kdf is not None:
             w_q = Window.partitionBy("class_key").orderBy(*_ORD)
@@ -1049,7 +1057,8 @@ class CrawlJob:
         wdf = (F.broadcast(wmap.select("class_key", "host", "_npre",
                                        "_gminr"))
                if isinstance(wmap, DataFrame) else
-               F.broadcast(self.spark.createDataFrame(
+               F.broadcast(local_frame(
+                   self.spark,
                    [(ck, h, w, gminr)
                     for (ck, h), (w, gminr) in sorted(wmap.items())],
                    "class_key string, host string, _npre int, _gminr int"))
@@ -1356,8 +1365,8 @@ class CrawlJob:
                 probe.add(p["canon_url"])
         probe -= claimed
         if probe:
-            pdf = self.spark.createDataFrame(
-                [(x,) for x in sorted(probe)], "canon_url string")
+            pdf = local_frame(self.spark, [(x,) for x in sorted(probe)],
+                              "canon_url string")
             claimed |= {
                 r["canon_url"] for r in
                 self.seen.select("canon_url")
@@ -1516,9 +1525,9 @@ class CrawlJob:
         affected = ({ck for ck, _h in wmap} | set(killed_rs_by_ck))
         if not pre_rows:
             return None, wmap, kills, affected
-        nq = self.spark.createDataFrame(
-            pre_rows, "class_key string, host string, _ts long,"
-                      " _dns boolean, _rob boolean, _base long")
+        nq = local_frame(
+            self.spark, pre_rows, "class_key string, host string, _ts long,"
+                                  " _dns boolean, _rob boolean, _base long")
         return self._prereq_frame(nq).coalesce(1), wmap, kills, affected
 
     def _merge_candidate_queues_sdf(self, c: DataFrame):
@@ -1849,7 +1858,7 @@ class CrawlJob:
                 salt = 1
         w = Window.partitionBy("class_key").orderBy(
             "directive", "cost", "ordinal")
-        a = (self._burst_topk_tiered(qdf, now, salt)
+        a = (self._burst_topk(qdf, salt)
              .withColumn("_rn", F.col("_rn") - 1))
 
         # Preselector re-check (P1): re-apply the CURRENT scope fold to
@@ -2064,9 +2073,8 @@ class CrawlJob:
             # Drain/retry step: no successful real fetch → no outlinks.
             # A local empty candidate relation lets Catalyst collapse the
             # whole pipeline (PropagateEmptyRelation) — no job 2 at all.
-            c = self._candidate_plan(
-                self.spark.createDataFrame([], CAND_SCHEMA),
-                materialize=False)
+            c = self._candidate_plan(local_frame(self.spark, [], CAND_SCHEMA),
+                                     materialize=False)
         else:
             # Attach URL strings to the bounded burst: one broadcast-probe
             # scan of the cold table per step — the cold side never
@@ -2231,7 +2239,7 @@ class CrawlJob:
         # and no queues were created) skip the job outright.
         _mark("sink_lazy")
         if n_new == 0:
-            new_rows = self.spark.createDataFrame([], NEW_SCHEMA)
+            new_rows = local_frame(self.spark, [], NEW_SCHEMA)
         else:
             # Per-queue ordinal split: batch effects (prereq inserts,
             # claims/kills) perturb ordinals ONLY inside the queues in
@@ -2247,8 +2255,8 @@ class CrawlJob:
             # ride a broadcast (not an isin literal list) to keep the
             # generated source step-invariant.
             if affected or pre is not None:
-                adf = F.broadcast(self.spark.createDataFrame(
-                    [(ck,) for ck in sorted(affected)],
+                adf = F.broadcast(local_frame(
+                    self.spark, [(ck,) for ck in sorted(affected)],
                     "class_key string"))
                 fin = (self._finish_candidates(
                            c.join(adf, "class_key", "left_semi"),
@@ -2377,7 +2385,8 @@ class CrawlJob:
             or e["max_fetches_per_host"] >= 0
             or e["max_bytes_per_host"] >= 0 for e in effs)
         if cfg.host_settings:
-            self._sgroup_dims = self.spark.createDataFrame(
+            self._sgroup_dims = local_frame(
+                self.spark,
                 [(g, float(e["delay_factor"]), float(e["min_delay_ms"]),
                   float(e["max_delay_ms"]), int(e["balance_replenish"]),
                   int(e["total_budget"]),
@@ -2464,9 +2473,8 @@ class CrawlJob:
         if self.qmode == "dataframe":
             qdf = self.queues_sdf.select(*QUEUE_COLS)
         else:
-            qdf = (self.spark.createDataFrame(self.queues[QUEUE_COLS])
-                   if len(self.queues) else self.spark.createDataFrame(
-                       [], QUEUE_SCHEMA))
+            qdf = _pandas_frame(self.spark, self.queues[QUEUE_COLS],
+                                QUEUE_SCHEMA)
         self.catalog.write("queue_state", qdf, step)
         self.catalog.write("host_state", self.host_state_df(), step)
         self.catalog.commit(step, {"now": self.now, "done": self.done},
@@ -2603,7 +2611,8 @@ class CrawlJob:
         cfg = self.cfg
         # The clock rides the update rows as a column (codegen-stable
         # across steps — same rationale as _live_queue_frame).
-        upd = F.broadcast(self.spark.createDataFrame(
+        upd = F.broadcast(local_frame(
+            self.spark,
             [(r["class_key"], int(r["wake0"]), int(r["tsum"]),
               int(r["charged"]), int(r["rsucc"]), int(r["rresp"]),
               int(r["rbytes"]), int(now)) for r in burst_rows],
@@ -2666,8 +2675,8 @@ class CrawlJob:
         candidate-batch half of the queue merge), lazy like the burst
         half."""
         if bump_ck:
-            bdf = F.broadcast(self.spark.createDataFrame(
-                list(zip(bump_ck, [int(n) for n in bump_n])),
+            bdf = F.broadcast(local_frame(
+                self.spark, list(zip(bump_ck, [int(n) for n in bump_n])),
                 "class_key string, _bump long"))
             self.queues_sdf = (
                 self.queues_sdf.join(bdf, "class_key", "left")
@@ -2678,7 +2687,7 @@ class CrawlJob:
                 .drop("_bump"))
         if new_qrows:
             self.queues_sdf = self.queues_sdf.unionByName(
-                self.spark.createDataFrame(new_qrows, QUEUE_SCHEMA))
+                local_frame(self.spark, new_qrows, QUEUE_SCHEMA))
 
     def _update_host_state(self, burst_rows) -> None:
         """CrawlStateUpdater (W1): fold burst fetch results into the
@@ -2724,7 +2733,8 @@ class CrawlJob:
         (new hosts appear as unmatched update rows).  The simulated-DNS
         answer is the queue_assign ip expression — no driver loop."""
         from heritrix_spark.functions.queue_assign import ip_of_host_expr
-        upd = self.spark.createDataFrame(
+        upd = local_frame(
+            self.spark,
             [(r["class_key"], int(r["rsucc"]), int(r["nfail"]),
               bool(r["dns_ok"]), bool(r["rob_ok"]), int(self.step))
              for r in burst_rows],
@@ -2759,9 +2769,8 @@ class CrawlJob:
     def host_state_df(self) -> DataFrame:
         if self.qmode == "dataframe":
             return self.host_state_sdf
-        if len(self.host_state) == 0:
-            return self.spark.createDataFrame([], HOST_STATE_SCHEMA)
-        return self.spark.createDataFrame(self.host_state[HOST_STATE_COLS])
+        return _pandas_frame(self.spark, self.host_state[HOST_STATE_COLS],
+                             HOST_STATE_SCHEMA)
 
     def _journal_scheduled(self, new_rows: DataFrame) -> None:
         """Append F+ (scheduled) journal entries — RecoveryJournal's
@@ -2769,8 +2778,7 @@ class CrawlJob:
         processed-event ``lineage`` reports stay pure."""
         # Step number rides a 1-row broadcast (not a literal) so every
         # step's pending branch shares one codegen source at flush time.
-        stepdf = self.spark.createDataFrame(
-            [(int(self.step),)], "_jstep int")
+        stepdf = local_frame(self.spark, [(int(self.step),)], "_jstep int")
         self._pending["scheduled"].append(new_rows.crossJoin(
             F.broadcast(stepdf)).select(
             F.col("_jstep").alias("crawl_step"),

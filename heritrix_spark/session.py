@@ -18,14 +18,23 @@ When launched via spark-submit, an existing session/master is respected
 ``spark.local.dir`` is applied only in local mode (single-box shuffle on
 tmpfs); clusters keep their manager-provisioned local dirs, or set
 ``SPARK_GRAFT_LOCAL_DIR`` explicitly.
+
+Driver-built frames go through :func:`local_frame` (an Arrow
+``LocalRelation``), never ``createDataFrame(<python list>)``: in classic
+PySpark a list-built frame is a PythonRDD, and every plan that reads it
+launches a Python-worker job to scan it.
 """
 
 from __future__ import annotations
 
 import os
 import re
+from collections.abc import Iterable
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 
 def _default_driver_mem() -> str:
@@ -82,6 +91,13 @@ def get_spark(
         # class cache thrashes and every step pays recompiles of the same
         # sources.  Sized to hold the whole loop's working set.
         .config("spark.sql.codegen.cache.maxEntries", "5000")
+        # PySpark 4 captures the Python call site of every Column function
+        # for error messages: a stack walk plus extra py4j round-trips per
+        # call, a third to a half of the driver's py4j traffic per
+        # superstep (measured: ~9.4k → 5.2-6.6k calls per tiny-crawl step).
+        # Turn it back on when chasing an error to its Python line:
+        #   SPARK_GRAFT_CONF='spark.python.sql.dataFrameDebugging.enabled=true'
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     # Shuffle/spill on tmpfs in LOCAL mode only (single-box shuffle writes
     # otherwise serialize on disk bandwidth and flatten core scaling);
@@ -126,3 +142,25 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows: Iterable[tuple],
+                schema: T.StructType | str) -> DataFrame:
+    """A small driver-built frame (``rows`` of ``schema``-ordered tuples;
+    ``schema`` a StructType or DDL string) as an Arrow ``LocalRelation``.
+
+    ``spark.createDataFrame(<python list>, schema)`` builds a PythonRDD in
+    classic PySpark, so every job that scans the frame starts Python
+    workers to unpickle its rows (0.2-0.6 s per use at crawl-step sizes).
+    An Arrow table becomes a ``LocalRelation``: the rows live in the plan,
+    the scan is a ``LocalTableScan`` with no Python worker, and an empty
+    frame is pruned by ``PropagateEmptyRelation``.  The values are still
+    data, not literals, so generated code does not change with them."""
+    struct = (T.StructType.fromDDL(schema) if isinstance(schema, str)
+              else schema)
+    arrow_schema = to_arrow_schema(struct)
+    cols = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema)
+    return spark.createDataFrame(table, struct)

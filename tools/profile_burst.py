@@ -8,7 +8,7 @@ then times the burst job's constituent scans separately:
   B. base scan + removal anti-join (count)
   C. B + qdf join + eligibility filter (count)
   D. C + WindowGroupLimit rank filter (count)
-  E. the full burst plan via _burst_topk_tiered (count)
+  E. the full burst plan via _burst_topk (count)
   F. the full burst + law columns + _ck (the real per-step job)
   G. rem_stats job (clock-input scan, pandas mode)
 
@@ -89,7 +89,6 @@ def main():
                       "bloom_active": job._bloom_bits is not None}),
           flush=True)
 
-    now = job.now
     qcols = ["class_key", "wake_ts", "balance"]
     qdf = job._live_queue_frame(qcols, now=job.now)
     base = job._base
@@ -97,7 +96,7 @@ def main():
     live = job._base_live()
     t("B_base_minus_removed", lambda: live.count())
     elig = F.col("earliest_ts") <= F.greatest(F.col("wake_ts"),
-                                              F.lit(now))
+                                              F.col("_now"))
     eb = live.join(job._maybe_bcast(qdf), "class_key").where(elig)
     t("C_plus_qdf_elig", lambda: eb.count())
     w1 = Window.partitionBy("class_key", "_salt").orderBy(
@@ -105,7 +104,7 @@ def main():
     ebk = (eb.withColumn("_srn", F.row_number().over(w1))
            .where(F.col("_srn") <= cfg.burst_max).drop("_srn", "_salt"))
     t("D_plus_wgl", lambda: ebk.count())
-    full = job._burst_topk_tiered(qdf, now, 1)
+    full = job._burst_topk(qdf, 1)
     t("E_full_topk", lambda: full.count())
     t("F_full_topk_ck", lambda: job._ck(full).count(), n=1)
     # G: the rem_stats-shaped scan (pandas-mode clock input)

@@ -86,7 +86,7 @@ def main():
     # Reconstruct one burst's parents the same way superstep does.
     qcols = ["class_key", "wake_ts", "balance"]
     qdf = job._live_queue_frame(qcols, now=job.now)
-    a = (job._burst_topk_tiered(qdf, job.now, 1)
+    a = (job._burst_topk(qdf, 1)
          .where(F.col("_rn") <= cfg.burst_max))
     sel = job._ck(a)
     parents = (job.frontier_cold
